@@ -231,9 +231,9 @@ def lzw_encode(data: bytes) -> bytes:
 
 
 def lzw_decode(data: bytes, expected: int) -> bytes:
-    """TIFF 6.0 LZW decode, same semantics as the per-symbol reference loop
-    (``_lzw_decode_ref`` below, kept as the parity oracle) but restructured
-    for speed:
+    """TIFF 6.0 LZW decode, same semantics as a per-symbol decode loop (the
+    parity oracle in ``tests/test_properties.py``) but restructured for
+    speed:
 
     * codes are extracted from the bit stream VECTORIZED per constant-width
       segment — between CLEAR codes the decoder's width schedule is
@@ -360,55 +360,6 @@ def lzw_decode(data: bytes, expected: int) -> bytes:
     # a stream that ran out of bits returns only what it decoded (same
     # short-buffer contract as the per-symbol loop)
     return bytes(out_mv[: min(pos, expected)])
-
-
-def _lzw_decode_ref(data: bytes, expected: int) -> bytes:
-    """Per-symbol reference decoder (the original formulation) — kept as the
-    parity oracle for the vectorized ``lzw_decode`` above."""
-    out = bytearray()
-    table: list[bytes] = []
-    bitbuf = 0
-    bitcnt = 0
-    pos = 0
-    width = 9
-    prev: bytes | None = None
-
-    def reset() -> None:
-        nonlocal table, width, prev
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-        prev = None
-
-    reset()
-    n = len(data)
-    while len(out) < expected:
-        while bitcnt < width:
-            if pos >= n:
-                return bytes(out[:expected])
-            bitbuf = (bitbuf << 8) | data[pos]
-            pos += 1
-            bitcnt += 8
-        bitcnt -= width
-        code = (bitbuf >> bitcnt) & ((1 << width) - 1)
-        if code == _LZW_EOI:
-            break
-        if code == _LZW_CLEAR:
-            reset()
-            continue
-        if code < len(table):
-            entry = table[code]
-            if prev is not None:
-                table.append(prev + entry[:1])
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]  # KwKwK case
-            table.append(entry)
-        else:
-            raise ValueError(f"corrupt LZW stream: code {code} out of range")
-        out.extend(entry)
-        prev = entry
-        if len(table) == (1 << width) - 1 and width < 12:
-            width += 1
-    return bytes(out[:expected])
 
 
 # --- predictors --------------------------------------------------------------

@@ -1,31 +1,28 @@
-"""Vectorized (Arrow/numpy) mirrors of the per-pixel Catalyst kernels.
+"""Vectorized numpy kernels for the focal operators.
 
-The focal/terrain/temporal operators were first written as pure Catalyst
-higher-order functions — zero Python nodes, zero added shuffles.  That shape
-is correct, but Catalyst HOF lambdas are *interpreted per element*: a 3x3
-stencil over a 4096-px chip evaluates ~37k lambda invocations per row, and
-profiles showed the stencil projections dominating those queries' wall time
-(guide §4.2: hand whole batches to vectorized native code instead).
+`operators/focal.py` runs each chip row through one of these kernels, one
+numpy pass per row inside ``mapInPandas`` (``map_chip_rows``); focal
+statistics reduce their stacked taps with ``band_math._stat_matrix``, the
+same per-pixel reduction the temporal composites use.  Written as Catalyst
+higher-order functions instead, the lambdas are interpreted per element: a
+3x3 stencil over a 4096-px chip is ~37k lambda invocations per row.
 
-These kernels are drop-in replacements with BIT-IDENTICAL results.  The
-discipline that makes that true:
+The float discipline that lets the independent truth mirrors
+(`sources/truth.py`) reproduce every non-trig surface bit for bit:
 
-* every float reduction replicates the Catalyst fold ORDER — sequential
-  left-folds become ``cumsum`` (numpy's cumsum accumulates strictly in
-  order; its last element IS the left-fold sum), never ``np.sum`` (pairwise
-  summation rounds differently);
-* "skip the nulls" folds never add a spurious ``0.0`` (which would turn a
-  ``-0.0`` partial into ``+0.0``): accumulation uses ``np.where(valid,
-  acc + term, acc)`` chains in tap order;
-* sorts use an IEEE-754 total-order key so ``-0.0 < 0.0`` exactly like
-  Java's ``Double.compare`` inside ``array_sort``;
-* expressions mirror the Catalyst tree shape (same association order).
+* null-skipping folds accumulate in tap (or collected) order through
+  ``np.where(valid, acc + term, acc)`` chains — never pairwise ``np.sum``,
+  and never a spurious ``0.0`` add (which would turn a ``-0.0`` partial
+  into ``+0.0``);
+* order statistics use a stable sort on the values themselves, so
+  ``-0.0`` and ``0.0`` tie and keep their input order (Spark's
+  ``array_sort`` / ``array_min`` / ``array_max`` semantics); NaN sorts last;
+* expressions keep one fixed association order.
 
 Inputs arrive through ``mapInPandas``: Arrow hands ``array<double>`` cells
 to pandas as float64 ndarrays with nulls already NaN, so null<->NaN is the
 (lossless) interchange convention here, exactly as in ``timeseries.gap_fill``.
-Rows whose ``values`` is null pass through with null outputs (matching
-``F.when(col.isNotNull(), ...)``).
+Rows whose ``values`` is null pass through with null outputs.
 """
 
 from __future__ import annotations
@@ -36,6 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from rasteret_spark.operators.band_math import _stat_matrix
 from rasteret_spark.operators.util import nanlist
 
 
@@ -47,33 +45,9 @@ def _row_array(cell) -> np.ndarray | None:
     return np.asarray(cell, dtype=np.float64)
 
 
-def seq_sum(a: np.ndarray, axis: int = -1) -> np.ndarray:
-    """Strict left-fold sum along ``axis`` (Catalyst ``aggregate`` order):
-    cumsum's last slot, not pairwise ``np.sum``."""
-    a = np.asarray(a, dtype=np.float64)
-    if a.shape[axis] == 0:
-        shape = list(a.shape)
-        del shape[axis if axis >= 0 else a.ndim + axis]
-        return np.zeros(shape)
-    return np.cumsum(a, axis=axis).take(-1, axis=axis)
-
-
-def total_order_key(a: np.ndarray) -> np.ndarray:
-    """IEEE-754 total-order sort key for float64 (no NaNs expected): maps
-    doubles to uint64 so ascending int order == Java Double.compare order
-    (``-0.0 < 0.0``)."""
-    u = a.view(np.uint64)
-    return np.where(u >> np.uint64(63) == 1, ~u, u | np.uint64(1 << 63))
-
-
-def sort_doubles(a: np.ndarray) -> np.ndarray:
-    """array_sort-equivalent ascending sort of a 1-D double array."""
-    return a[np.argsort(total_order_key(a), kind="stable")]
-
-
 def _clamped_taps(v2d: np.ndarray, radius: int):
     """Replicate-clamped window taps of a 2-D array in row-major offset
-    order — the exact tap order of ``focal._taps``.  Yields (dr, dc, tap)
+    order (the order every fold accumulates in).  Yields (dr, dc, tap)
     where ``tap`` has the input shape."""
     p = np.pad(v2d, radius, mode="edge")
     h, w = v2d.shape
@@ -83,35 +57,19 @@ def _clamped_taps(v2d: np.ndarray, radius: int):
 
 
 def focal_stat_2d(v2d: np.ndarray, stat: str, radius: int) -> np.ndarray:
-    """Mirror of ``focal.focal_stats``'s per-pixel expression over one chip:
-    statistic over the VALID taps of the replicate-clamped window; a pixel
-    with zero valid taps is NaN (null)."""
-    taps = [t for _, _, t in _clamped_taps(v2d, radius)]
-    valid = [~np.isnan(t) for t in taps]
-    nv = np.zeros(v2d.shape)
-    for m in valid:
-        nv = nv + m
-    if stat == "count":
-        return nv + 0.0  # count of valid taps as double
-    if stat in ("min", "max"):
-        # array_min/array_max are total-order reductions; the safe mirror
-        # needs -0.0-aware key comparisons — not needed by any query path,
-        # so these stats stay on the Catalyst implementation
-        raise NotImplementedError("min/max focal stats use the catalyst impl")
-    # sum / mean: left-fold over valid taps in tap order, no spurious 0.0
-    s = np.zeros(v2d.shape)
-    for t, m in zip(taps, valid):
-        s = np.where(m, s + np.where(m, t, 0.0), s)
-    if stat == "sum":
-        return np.where(nv > 0, s, np.nan)
-    return np.where(nv > 0, s / nv, np.nan)
+    """``focal.focal_stats`` over one chip: the statistic over the VALID
+    taps of the replicate-clamped window (taps stacked K x N, reduced per
+    pixel by ``band_math._stat_matrix``); a pixel with zero valid taps is
+    NaN (null)."""
+    taps = np.stack([t.ravel() for _, _, t in _clamped_taps(v2d, radius)])
+    return _stat_matrix(taps, stat).reshape(v2d.shape)
 
 
 def convolve_2d(
     v2d: np.ndarray, kernel: list[list[float]], normalize: bool
 ) -> np.ndarray:
-    """Mirror of ``focal.convolve``'s per-pixel expression (strict stencil
-    or valid-renormalized)."""
+    """``focal.convolve`` over one chip (strict stencil or
+    valid-renormalized)."""
     radius = len(kernel) // 2
     terms = [
         (t, float(kernel[dr + radius][dc + radius]))
@@ -139,8 +97,8 @@ SOBEL_Y = ((-1.0, -2.0, -1.0), (0.0, 0.0, 0.0), (1.0, 2.0, 1.0))
 
 
 def sobel_2d(v2d: np.ndarray) -> np.ndarray:
-    """Mirror of ``focal.sobel``: gx/gy as ordered weighted sums over ALL
-    taps (zero weights included, same association order), strict null."""
+    """``focal.sobel`` over one chip: gx/gy as ordered weighted sums over
+    ALL taps (zero weights included, tap order), strict null."""
     taps = list(_clamped_taps(v2d, 1))
     gx = None
     gy = None
@@ -163,10 +121,10 @@ def terrain_2d(
     altitude: float,
     azimuth: float,
 ) -> dict[str, np.ndarray]:
-    """Mirror of ``focal.terrain``'s per-pixel Horn expressions.  The
-    gradient surfaces (dzdx/dzdy and everything derived without trig) are
-    bit-exact; slope/aspect/hillshade use libm atan/atan2/cos which may
-    differ from the JVM's in the last ulp (tests pin those by tolerance)."""
+    """``focal.terrain``'s per-pixel Horn expressions over one chip.  The
+    gradient surfaces (dzdx/dzdy) are reproducible bit for bit;
+    slope/aspect/hillshade go through libm atan/atan2/cos (tests pin those
+    by tolerance, like the reference pins gdaldem parity)."""
     import math
 
     t = {(dr, dc): tap for dr, dc, tap in _clamped_taps(v2d, 1)}
@@ -199,9 +157,9 @@ def terrain_2d(
 
 
 def _masked_fold(terms: np.ndarray) -> float:
-    """Catalyst ``aggregate(filter(arr, notNull), 0.0, +)`` over a flat
-    per-pixel term array (NaN = null): sequential sum of the non-null terms
-    in pixel order, no spurious 0.0 additions."""
+    """Sequential sum of the non-null terms of a flat per-pixel term array
+    (NaN = null) in pixel order, no spurious 0.0 additions; 0.0 when all
+    terms are null."""
     kept = terms[~np.isnan(terms)]
     if kept.size == 0:
         return 0.0
@@ -209,9 +167,9 @@ def _masked_fold(terms: np.ndarray) -> float:
 
 
 def spatial_stats_row(v2d: np.ndarray) -> dict:
-    """Mirror of ``focal.spatial_stats``'s staged Catalyst folds for one
-    chip: rook-contiguity Moran's I / Geary's C with the exact same
-    (pixel-major, then N/S/W/E) float accumulation order."""
+    """``focal.spatial_stats`` for one chip: rook-contiguity Moran's I /
+    Geary's C, every sum accumulated in a fixed (pixel-major, then
+    N/S/W/E) order."""
     h, w = v2d.shape
     valid = ~np.isnan(v2d)
     n_valid = int(valid.sum())

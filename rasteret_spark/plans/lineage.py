@@ -222,12 +222,14 @@ def checkpointed_run(
             acc.add({k: (v, wall) for k, v in local.items()})
 
         instrumented = result.mapInPandas(_instrument, schema=result.schema)
-        with_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            instrumented.write.partitionBy("part_id").mode("overwrite").parquet(data_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_dyn)
+        # dynamic overwrite on this write only: replace the re-run buckets,
+        # keep the completed ones (no session-wide conf change)
+        (
+            instrumented.write.partitionBy("part_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(data_dir)
+        )
         # log rows AFTER data is durably written (kill-safe ordering);
         # rows_out comes from the written files' footers (retry-exact) —
         # the accumulator keeps only the best-effort wall timings

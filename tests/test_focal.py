@@ -1,8 +1,7 @@
 """Focal window operators (operators/focal.py): numpy-oracle exactness for
 every statistic, replicate-edge and null semantics, strict vs normalized
 convolution, Sobel gradients, composition over real mosaic rows, and the
-plan contract (pure Catalyst: no Python nodes, ZERO shuffles — the stencil
-is a projection).
+plan contract (ZERO shuffles — each chip row is processed where it is).
 
 Reference parity: the reference hands assembled xarrays to the client for
 neighborhood post-processing (`examples/landsat_xarray.py`); here the
@@ -17,6 +16,9 @@ from rasteret_spark.operators import focal
 from rasteret_spark.operators import raster_mosaic as rmo
 
 W, H = 6, 5
+
+SOBEL_X = ((-1.0, 0.0, 1.0), (-2.0, 0.0, 2.0), (-1.0, 0.0, 1.0))
+SOBEL_Y = ((-1.0, -2.0, -1.0), (0.0, 0.0, 0.0), (1.0, 2.0, 1.0))
 
 
 def _grid(w=W, h=H):
@@ -53,7 +55,7 @@ def per_band(spark):
 
 def _windows(a2d, radius):
     """All clamped windows as (h, w, (2r+1)^2) in row-major offset order —
-    the same order the Catalyst expression accumulates in."""
+    the same order the engine's kernels accumulate in."""
     h, w = a2d.shape
     pad = np.pad(a2d, radius, mode="edge")
     taps = []
@@ -161,8 +163,8 @@ def test_convolve_zero_weight_taps_still_gate_strict_nulls(spark):
 def test_sobel_matches_numpy(per_band):
     df, truth = per_band
     out = {r.chip_id: r for r in focal.sobel(df).collect()}
-    kx = np.asarray(focal.SOBEL_X).ravel()
-    ky = np.asarray(focal.SOBEL_Y).ravel()
+    kx = np.asarray(SOBEL_X).ravel()
+    ky = np.asarray(SOBEL_Y).ravel()
     for chip, a in truth.items():
         win = _windows(a, 1)
         any_null = np.isnan(win).any(-1)
@@ -193,19 +195,13 @@ def test_validation_errors(per_band):
 
 
 def test_plan_is_pure_projection(per_band):
-    """catalyst impl: no Python nodes and NO exchange.  Default (arrow)
-    impl: vectorized numpy batches, still ZERO added exchanges — the
-    stencil stays where the pixels are either way."""
+    """The stencils run as vectorized numpy batches with ZERO added
+    exchanges — the stencil stays where the pixels are."""
     df, _ = per_band
-    fm = focal.focal_stats(df, "mean", radius=1, out_col="fm", impl="catalyst")
-    sb = focal.sobel(fm, value_col="fm", out_col="sb", impl="catalyst")
+    fm = focal.focal_stats(df, "mean", radius=1, out_col="fm")
+    sb = focal.sobel(fm, value_col="fm", out_col="sb")
     plan = sb._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan and "InPandas" not in plan
     assert plan.count("Exchange") == 0
-    fm_a = focal.focal_stats(df, "mean", radius=1, out_col="fm")
-    sb_a = focal.sobel(fm_a, value_col="fm", out_col="sb")
-    plan_a = sb_a._jdf.queryExecution().executedPlan().toString()
-    assert plan_a.count("Exchange") == 0
 
 
 def _np_terrain(a2d, xres, yres, z_factor=1.0, altitude=45.0, azimuth=315.0):
@@ -295,13 +291,9 @@ def test_terrain_validation_and_plan(per_band):
         focal.terrain(df, outs=("slope", "curvature"))
     with pytest.raises(ValueError, match="needs column"):
         focal.terrain(df.drop("chip_xres"))
-    plan = (focal.terrain(df, impl="catalyst")._jdf.queryExecution()
+    plan = (focal.terrain(df)._jdf.queryExecution()
             .executedPlan().toString())
-    assert "EvalPython" not in plan and "InPandas" not in plan
     assert plan.count("Exchange") == 0
-    plan_a = (focal.terrain(df)._jdf.queryExecution()
-              .executedPlan().toString())
-    assert plan_a.count("Exchange") == 0
 
 
 def _np_spatial(a2d):
@@ -363,12 +355,9 @@ def test_spatial_stats_known_patterns(spark):
     assert got["checker"].morans_i == -1.0  # every neighbor pair opposes
     assert got["halves"].morans_i > 0.5
     assert got["checker"].gearys_c > 1.0 and got["halves"].gearys_c < 0.5
-    plan = (focal.spatial_stats(spark.createDataFrame(rows), impl="catalyst")
+    plan = (focal.spatial_stats(spark.createDataFrame(rows))
             ._jdf.queryExecution().executedPlan().toString())
-    assert "EvalPython" not in plan and plan.count("Exchange") == 0
-    plan_a = (focal.spatial_stats(spark.createDataFrame(rows))
-              ._jdf.queryExecution().executedPlan().toString())
-    assert plan_a.count("Exchange") == 0
+    assert plan.count("Exchange") == 0
 
 
 def test_spatial_stats_truth_mirror_agrees_on_real_chips(spark):
@@ -457,41 +446,9 @@ def test_focal_over_real_mosaic_composes(spark, images_pdf):
         fm_want = _np_focal(a, "mean", 1)
         win = _windows(fm_want, 1)
         any_null = np.isnan(win).any(-1)
-        gx = (win * np.asarray(focal.SOBEL_X).ravel()).sum(-1)
-        gy = (win * np.asarray(focal.SOBEL_Y).ravel()).sum(-1)
+        gx = (win * np.asarray(SOBEL_X).ravel()).sum(-1)
+        gy = (win * np.asarray(SOBEL_Y).ravel()).sum(-1)
         want = np.where(any_null, np.nan, np.sqrt(gx**2 + gy**2)).ravel()
         np.testing.assert_allclose(
             _got(got[chip_id], "sb"), want, rtol=0, atol=1e-9, equal_nan=True)
     mosaic.unpersist()
-
-
-def test_arrow_impl_matches_catalyst_bit_exact(per_band):
-    """The vectorized (arrow) kernels are drop-in replacements: every
-    non-trig surface must equal the Catalyst HOF implementation bit for
-    bit (fold order, null semantics, -0.0 handling)."""
-    df, _ = per_band
-
-    def rows(d):
-        return {
-            (r["chip_id"], r["band"]): r.asDict()
-            for r in d.collect()
-        }
-
-    pairs = [
-        (focal.focal_stats(df, "mean", radius=1, impl="arrow"),
-         focal.focal_stats(df, "mean", radius=1, impl="catalyst")),
-        (focal.sobel(df, impl="arrow"), focal.sobel(df, impl="catalyst")),
-        (focal.convolve(df, [[1, 2, 1], [2, 4, 2], [1, 2, 1]],
-                        normalize=True, impl="arrow"),
-         focal.convolve(df, [[1, 2, 1], [2, 4, 2], [1, 2, 1]],
-                        normalize=True, impl="catalyst")),
-        (focal.terrain(df, outs=("dzdx", "dzdy"), impl="arrow"),
-         focal.terrain(df, outs=("dzdx", "dzdy"), impl="catalyst")),
-        (focal.spatial_stats(df, impl="arrow"),
-         focal.spatial_stats(df, impl="catalyst")),
-    ]
-    for a_df, c_df in pairs:
-        a, c = rows(a_df), rows(c_df)
-        assert a.keys() == c.keys()
-        for k in a:
-            assert a[k] == c[k], (k, a[k], c[k])

@@ -51,9 +51,14 @@ def test_partial_then_resume_completes(spark, workdir):
     done_before = lineage.completed_parts(spark, workdir, "s1")
     assert 0 < len(done_before) <= 4
 
+    # the resume write replaces only its own buckets under the session's
+    # default (static) overwrite mode, and leaves that mode as it found it
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
     out = lineage.checkpointed_run(
         spark, df, _transform, workdir, key_col="key", stage="s1", n_parts=8
     )
+    assert spark.conf.get(mode_key) == mode_before
     assert out.count() == 1000
     assert sorted(r.doubled for r in out.collect()) == sorted(
         (i % 7) * 2 for i in range(1000)

@@ -12,6 +12,7 @@ zstandard library (src/rasteret/fetch/cog.py:843-966); here the format
 itself is implemented from the public RFC in format/zstd.py.
 """
 
+import os
 import struct
 
 import numpy as np
@@ -20,6 +21,13 @@ import pytest
 from rasteret_spark.format import codecs, tiff, zstd
 
 FIX = "/root/reference/fixtures"
+# in-repo fixture: written by format/tiffwrite.py with every strip frame
+# from libzstd (zstd.compress_fast); regenerate with
+# ``PYTHONPATH=. python tests/test_zstd.py``
+LOCAL_FIX = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fixtures", "int16_zstd_strips.tif"
+)
+ROWS_PER_STRIP = 16
 
 _HAVE_LIB = zstd._libzstd() is not None
 
@@ -95,6 +103,55 @@ def test_pure_roundtrip_without_lib():
         assert zstd.decompress(zstd.compress(data)) == data, name
 
 
+def _fixture_array() -> np.ndarray:
+    """64x64 int16 ramp + hashed noise (no RNG stream): libzstd codes its
+    strips as compressed blocks with Huffman literals."""
+    ramp = np.add.outer(np.arange(64) * 37, np.arange(64) * 11) % 4000 - 2000
+    k = np.arange(64 * 64, dtype=np.int64)
+    noise = ((k * 2654435761) % (1 << 32) >> 20) % 81 - 40
+    return (ramp + noise.reshape(64, 64)).astype(np.int16)
+
+
+def _write_fixture(path: str) -> None:
+    """tiffwrite's strip writer with its zstd frames from libzstd: the
+    writer calls ``zstd.compress``, routed here to ``compress_fast``."""
+    from rasteret_spark.format import tiffwrite
+
+    if not _HAVE_LIB:
+        raise RuntimeError("libzstd is needed to write the fixture")
+    pure = zstd.compress
+    zstd.compress = zstd.compress_fast
+    try:
+        blob = tiffwrite.write_tiff(
+            _fixture_array(), rows_per_strip=ROWS_PER_STRIP, compression="zstd"
+        )
+    finally:
+        zstd.compress = pure
+    with open(path, "wb") as f:
+        f.write(blob)
+
+
+def test_local_fixture_strip_pure_python():
+    """The in-repo libzstd-written strip TIFF decodes through the PURE
+    decoder (not the ctypes path) to the array it was written from."""
+    read = tiff.file_read(LOCAL_FIX)
+    m = tiff.parse_tiff(read)
+    assert m.compression == 50000 and m.dtype_name == "int16"
+    assert m.tile_h == ROWS_PER_STRIP and len(m.tile_offsets) == 4
+    rows = []
+    for i, (off, cnt) in enumerate(zip(m.tile_offsets, m.tile_byte_counts)):
+        payload = read(int(off), int(cnt))
+        raw = zstd.decompress(payload)
+        # an entropy-coded libzstd frame, not the pure raw/RLE encoder's
+        assert len(payload) < len(raw) and payload != zstd.compress(raw)
+        n_rows = min(ROWS_PER_STRIP, m.height - i * ROWS_PER_STRIP)
+        rows.append(np.frombuffer(raw, dtype=m.dtype).reshape(n_rows, m.width))
+    np.testing.assert_array_equal(np.vstack(rows), _fixture_array())
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(FIX), reason="reference fixtures not present"
+)
 def test_reference_fixture_strip_pure_python():
     """libtiff+libzstd produced fixtures/int16_zstd.tif; its strip payloads
     must decode through the PURE decoder (not the ctypes path) bit-exactly.
@@ -268,3 +325,9 @@ def test_fast_path_multiframe_matches_pure():
     a, b = b"first frame ", b"second frame"
     stream = zstd.compress(a) + zstd.compress(b)
     assert zstd.decompress_fast(stream, expected=len(a) + len(b)) == a + b
+
+
+if __name__ == "__main__":
+    os.makedirs(os.path.dirname(LOCAL_FIX), exist_ok=True)
+    _write_fixture(LOCAL_FIX)
+    print(LOCAL_FIX)
